@@ -207,11 +207,18 @@ def _probe_cids_arrow(centroids, nprobe: int):
 
     from pyspark.sql.pandas.functions import pandas_udf
 
-    # asNondeterministic: downstream null-rejection/Generate-derived
-    # filters referencing the probe list otherwise push below the
-    # projection and DUPLICATE the kernel (guide §4.4); the ranking is
-    # deterministic — the marker only pins one evaluation per row.
-    return pandas_udf(_kernel, "array<int>").asNondeterministic()
+    # Deterministic, and carries no asNondeterministic() marker: Spark
+    # plants no dynamic partition pruning subquery over a
+    # non-deterministic build side, so a marker here would make every
+    # persisted-index probe read every centroid partition. Callers
+    # must expand the list with F.explode_outer, not F.explode: an
+    # inner explode infers size(probe_cids) > 0 AND isnotnull(...)
+    # (InferFiltersFromGenerate), which pushes below the projection
+    # and DUPLICATES the kernel (guide §4.4). The outer form yields
+    # the same rows: the list is never NULL (_assign_matrix zero-fills
+    # bad vectors), and an empty one (nprobe < 1) gives a NULL
+    # centroid_id that the inner probe join drops.
+    return pandas_udf(_kernel, "array<int>")
 
 
 def _nearest_centroid_arrow(centroids):
@@ -1073,7 +1080,9 @@ def _query_probe_frame(
             _probe_cids_arrow(centroids, nprobe)(F.col("q_vec")),
         )
         .select(
-            "query_id", "q_vec", F.explode("probe_cids").alias("centroid_id")
+            "query_id",
+            "q_vec",
+            F.explode_outer("probe_cids").alias("centroid_id"),
         )
     )
 
@@ -1148,11 +1157,16 @@ def save_ivf_index(
 ) -> None:
     """Materialize the IVF index as TABLES: the centroid codebook and
     the corpus partitioned-by-centroid — so the (expensive) k-means
-    train + assign runs once and every later query is a partition-
-    pruned read. ``partitionBy(centroid_id)`` is the point: a probe
-    of nprobe partitions lists only those directories, touching
-    ~nprobe/K of the corpus FILES (file-level pruning, not a
-    post-scan filter)."""
+    train + assign runs once and every later query can be a
+    partition-pruned read. ``partitionBy(centroid_id)`` is the point:
+    :func:`ivf_index_topk`'s probe join on ``centroid_id`` lets Spark
+    plant a DYNAMIC partition pruning subquery in the corpus scan, so
+    a probe of nprobe partitions lists only those directories,
+    touching ~nprobe/K of the corpus FILES (file-level pruning, not a
+    post-scan filter). Spark plants it only when the query frame
+    carries a selective predicate (e.g. ``vec_id IN (...)``); a
+    query frame of literal rows with no filter still reads every
+    partition."""
     import os
 
     centroids = save_ivf_centroids(
@@ -1320,10 +1334,18 @@ def ivf_index_topk(
     nprobe: int | None = None,
 ) -> DataFrame:
     """Top-k from a SAVED index: rank centroids for each query
-    (codebook is a literal — no corpus access), then read ONLY the
-    probed partitions of the corpus table and score those. The
-    centroid_id filter prunes at the directory level, which is the
-    persistent-index form of ivf_topk's probe join."""
+    (codebook rides in the kernel closure — no corpus access), then
+    join the probe list to the corpus table on ``centroid_id`` and
+    score the candidates: the persistent-index form of ivf_topk's
+    probe join.
+
+    The pruning is DYNAMIC: Spark plants a partition pruning subquery
+    on ``centroid_id`` in the corpus scan, so only the probed
+    partition directories are read, when ``queries`` carries a
+    selective predicate (the catalog lanes' ``vec_id IN (...)``). A
+    ``queries`` frame built from literal rows with no filter (e.g.
+    ``spark.createDataFrame``) gets no pruning subquery and reads
+    every partition; results are the same either way."""
     import os
 
     centroids = load_ivf_centroids(spark, index_dir)
@@ -1335,7 +1357,9 @@ def ivf_index_topk(
             _probe_cids_arrow(centroids, nprobe)(F.col("q_vec")),
         )
         .select(
-            "query_id", "q_vec", F.explode("probe_cids").alias("centroid_id")
+            "query_id",
+            "q_vec",
+            F.explode_outer("probe_cids").alias("centroid_id"),
         )
     )
     corpus = spark.read.parquet(os.path.join(index_dir, "corpus"))

@@ -1413,7 +1413,9 @@ def knn_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
         "the trained centroid codebook and the corpus PARTITIONED BY "
         "centroid id as parquet tables (train + assign run ONCE), then "
         "ivf_index_topk probes only nprobe partition DIRECTORIES per "
-        "query (file-level partition pruning, not a post-scan filter): "
+        "query (dynamic partition pruning on centroid_id, planted "
+        "because the query frame is a vec_id IN filter; not a "
+        "post-scan filter): "
         "the build-once/probe-many deployment shape of knn_ivf_topk, "
         "value-hash-gated against the same SQL replay"
     ),
